@@ -226,11 +226,10 @@ object Cli {
         knowDb = graft.project.KnowDbLoader.load(pd.root),
         statPrint = pa.statPrint)
       q.awaitTermination()
-    case "wparse" :: "project" :: dir :: rest0
-        if { parseFlags(rest0).rest.forall(_ == "--merged-sinks") } =>
+    case "wparse" :: "project" :: dir :: rest0 if parseFlags(rest0).rest.isEmpty =>
       // run a whole wp-proj-style instance dir (conf/wparse.toml +
-      // topology + connectors) in batch; sinks default to sharded part
-      // dirs (<path>.d) — --merged-sinks opts into single merged files.
+      // topology + connectors) in batch; every routed sink is written
+      // once, as a part-file directory <path>.d.
       // Reference ParseArgs flags: -n/--max_line, -w/--parse-workers,
       // -p/--print_stat, --wpl <dir> override
       val pa = parseFlags(rest0)
@@ -240,7 +239,6 @@ object Cli {
       // lookups for the whole instance
       val reports = graft.project.ProjectRun.runBatch(spark, p,
         knowDb = graft.project.KnowDbLoader.load(p.root),
-        shardedSinks = pa.rest.isEmpty,
         maxLines = pa.maxLines, parseWorkers = pa.workers,
         statPrint = pa.statPrint)
       reports.foreach { r =>

@@ -238,6 +238,12 @@ object OmlText {
     var keys = Vector.empty[String]
     var optKeys = Vector.empty[String]
     var jsonPath: Option[String] = None
+    // a key character outside the set would never advance the cursor
+    def key(p: Char => Boolean): String = {
+      val k = s.takeWhile(p)
+      if (k.isEmpty) throw new OErr(s"unexpected '${s.peek}' in take/read keys", s.pos)
+      k
+    }
     while (!s.atEnd && s.peek != ')') {
       if (s.startsWithKw("option") || s.startsWithKw("keys") || s.startsWithKw("in")) {
         s.takeWhile(_.isLetter)
@@ -245,7 +251,7 @@ object OmlText {
         if (!s.atEnd && s.peek == ':') s.pos += 1
         s.ws(); s.expectCh('['); s.ws()
         while (!s.atEnd && s.peek != ']') {
-          optKeys :+= s.takeWhile(c => VParser.isIdent(c) || c == '*')
+          optKeys :+= key(c => VParser.isIdent(c) || c == '*')
           s.ws()
           if (!s.atEnd && s.peek == ',') { s.pos += 1; s.ws() }
         }
@@ -256,7 +262,7 @@ object OmlText {
       } else if (s.peek == '/') {
         jsonPath = Some(s.takeWhile(c => VParser.isIdent(c) || c == '/' || c == '[' || c == ']'))
       } else {
-        keys :+= s.takeWhile(c => VParser.isIdent(c) || c == '*')
+        keys :+= key(c => VParser.isIdent(c) || c == '*')
       }
       s.ws()
       if (!s.atEnd && s.peek == ',') { s.pos += 1; s.ws() }

@@ -615,6 +615,16 @@ object Project {
 
   // ---- check ---------------------------------------------------------
 
+  /** Sinks of a kind the engine does not deliver: only `file` (part-file
+    * directories) and `blackhole` (records dropped) are written, so a
+    * kafka/tcp/syslog sink is refused rather than reported as written. */
+  def undelivered(p: Loaded): Vector[String] =
+    for {
+      g <- p.business ++ p.infra.values
+      s <- g.sinks if s.kind != "file" && s.kind != "blackhole"
+    } yield s"sink '${g.name}/${s.name}': kind '${s.kind}' is not delivered " +
+      "(only file and blackhole sinks are written)"
+
   /** Static project validation (reference `wproj check` /
     * `crates/wp-proj/src/project/checker`): parse all models, verify
     * route targets exist, verify oml matchers reference loaded models,
@@ -652,6 +662,7 @@ object Project {
       if (g.omlPatterns.isEmpty && g.rulePatterns.isEmpty)
         problems += s"sink group '${g.name}': no oml/rule matchers (receives nothing)"
     }
+    problems ++= undelivered(p)
     (p.business ++ p.infra.values).foreach { g =>
       g.sinks.foreach { s =>
         if (s.kind == "file" && s.path.isEmpty)

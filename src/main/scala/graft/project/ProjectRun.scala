@@ -1,7 +1,7 @@
 package graft.project
 
 import java.io.File
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Pipeline
 import graft.oml.KnowDb
@@ -21,9 +21,10 @@ import graft.sinks.SinkRouter
   *       error → `error`; non-empty residue → `residue` (additionally).
   *
   * The whole route stage is Column predicates over ONE persisted parsed
-  * frame — each sink is a filtered projection + text write, so the plan
-  * stays a scan→narrow-select per sink with no shuffle; at 100 TB this
-  * is the same shape as the reference's per-sink channel fanout.
+  * frame — each sink is a filtered projection written once by
+  * [[writeSinks]], so the plan stays a scan→narrow-select per sink with
+  * no shuffle and one job; at 100 TB this is the same shape as the
+  * reference's per-sink channel fanout.
   *
   * Sink fmt rides the generic (name, dtype, sval) field triples; `time`
   * renders as epoch-micros and nested obj/array as their canonical JSON
@@ -48,37 +49,14 @@ object ProjectRun {
   private def fmtLine(fmt: String): Column =
     graft.sinks.Formatters.line(fmt, col("fields"))
 
-  private def writeText(df: DataFrame, line: Column, out: File): Long = {
-    val rows = df.count()
-    out.getParentFile.mkdirs()
-    // coalesce(1): sink files are line-oriented daemon outputs, matching
-    // the reference's single append stream per sink; at cluster scale the
-    // file connector would shard (params base/file per partition) instead
-    df.select(line.as("value")).coalesce(1).write.mode("overwrite")
-      .text(out.getPath + ".spark")
-    val part = Option(new File(out.getPath + ".spark").listFiles()).getOrElse(Array.empty)
-      .find(f => f.getName.startsWith("part") && !f.getName.endsWith(".crc"))
-    out.delete()
-    part match {
-      case Some(pf) => java.nio.file.Files.move(pf.toPath, out.toPath)
-      case None => java.nio.file.Files.write(out.toPath, Array.empty[Byte])
-    }
-    deleteRec(new File(out.getPath + ".spark"))
-    rows
-  }
-
   /** Rule-target wildcard → anchored regex for Column rlike. */
   private def globToRegex(pat: String): String =
     "^" + java.util.regex.Pattern.quote(pat).replace("*", "\\E.*\\Q") + "$"
 
-  private def deleteRec(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete()
-  }
-
-  /** Read a sink's lines regardless of layout: a single merged file
-    * (`<path>`, opt-in mode), a sharded part directory (`<path>.d`,
-    * the default), or a bare directory at `<path>`. */
+  /** Read a sink's lines regardless of layout: its part-file directory
+    * (`<path>.d`, with per-batch and `rescued` subdirectories), a bare
+    * directory at `<path>`, or a single merged file at `<path>` (the
+    * layout of older outputs). */
   def readSinkLines(base: File): Vector[String] = {
     def partLines(dir: File): Vector[String] = {
       val entries = Option(dir.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
@@ -100,14 +78,6 @@ object ProjectRun {
     else Vector.empty
   }
 
-  /** Run the project in batch over its enabled file sources. Returns
-    * per-sink write reports (rows, intercepts, expect validation).
-    *
-    * `shardedSinks = true` (the DEFAULT — the multi-executor shape)
-    * writes each file sink as a part-file DIRECTORY (`<path>.d`); a
-    * single merged file serializes the whole output through one task,
-    * so it is the opt-in (`shardedSinks = false`, CLI `--merged-sinks`)
-    * for byte-parity with the reference's append-to-one-file connector. */
   /** Mechanism-field tag set: `wp_src_key` = the source's configured
     * key, merged under the user's own tags (an explicit tag with the
     * same name wins). Reference: parser.rs appends wp_src_key on every
@@ -142,7 +112,13 @@ object ProjectRun {
     }
   }
 
-  /** `maxLines` = the reference's `-n/--max_line` picker cap (applies
+  /** Run the project in batch over its enabled file sources: parse
+    * once (persisted), then [[writeSinks]] writes every routed sink once
+    * as a part-file directory `<path>.d`. Returns per-sink reports (rows,
+    * intercepts, expect validation). A sink kind that is not delivered
+    * ([[Project.undelivered]]) refuses the run before any job.
+    *
+    * `maxLines` = the reference's `-n/--max_line` picker cap (applies
     * per source, as each reference picker consumes its own budget);
     * `parseWorkers` = the `-w/--parse-workers` CLI override, which wins
     * over `[performance].parse_workers`; `statPrint` = `-p`: print
@@ -150,10 +126,10 @@ object ProjectRun {
   def runBatch(spark: SparkSession, p: Project.Loaded,
                knowDb: KnowDb = KnowDb.empty,
                enricher: graft.wpl.Enricher = graft.wpl.Enricher.empty,
-               shardedSinks: Boolean = true,
                maxLines: Option[Long] = None,
                parseWorkers: Option[Int] = None,
                statPrint: Boolean = false): Vector[SinkReport] = {
+    refuseUndelivered(p)
     p.conf.logLevel.foreach(l => spark.sparkContext.setLogLevel(l.toUpperCase))
     val sources = p.fileSources.filter(_.enable)
     require(sources.nonEmpty, "no enabled file sources")
@@ -173,7 +149,7 @@ object ProjectRun {
         semanticEnabled = p.conf.semanticEnabled)) // [semantic].enabled, default off
     }.reduce(_ unionByName _).persist()
     try {
-      val reports = routeAndWrite(p, parsed, shardedSinks)
+      val reports = validateExpects(p, parsed, writeSinks(p, routePlan(p, parsed), ""))
       // [rescue].path capture: failed payloads feed a later `wprescue`
       writeRescue(p, parsed)
       if (statPrint)
@@ -183,27 +159,18 @@ object ProjectRun {
     } finally parsed.unpersist()
   }
 
-  /** One routed sink write: the filtered frame plus the line-formatting
-    * column to emit. `intercepted` carries the records the sink's filter
-    * diverted (they flow to the `intercept` infra group). */
+  /** One routed sink: the frame it writes (its group's input, observed,
+    * then kept by the sink's filter), the line-formatting column, and
+    * the observation of that input — `input` records entered, `rows`
+    * kept — which the sink's own write fills. */
   final case class RoutedSink(group: String, sink: String, kind: String,
                               path: String, line: Column, df: DataFrame,
-                              intercepted: Option[DataFrame])
+                              counts: Observation)
 
-  /** routePlan plus the per-group INPUT frames (the `group_input`
-    * expect basis — records entering the group before per-sink
-    * filters). */
-  final case class RoutePlanOut(sinks: Vector[RoutedSink],
-                                groupInputs: Map[String, DataFrame])
-
-  /** Build the full routing plan over a parsed frame — shared by batch
-    * and streaming (per micro-batch). Pure plan construction: every
-    * entry is a filtered projection of `parsed`, no actions. */
-  def routePlan(p: Project.Loaded, parsed: DataFrame): Vector[RoutedSink] =
-    routePlanFull(p, parsed).sinks
-
-  def routePlanFull(p: Project.Loaded, parsed: DataFrame): RoutePlanOut = {
-    val groupIns = Map.newBuilder[String, DataFrame]
+  /** Build the full routing plan over a parsed frame — shared by batch,
+    * streaming (per micro-batch) and rescue. Pure plan construction:
+    * every entry is a filtered projection of `parsed`, no actions. */
+  def routePlan(p: Project.Loaded, parsed: DataFrame): Vector[RoutedSink] = {
     val out = Vector.newBuilder[RoutedSink]
     val routable = col("status").isin("ok", "default", "residue-only")
 
@@ -218,25 +185,32 @@ object ProjectRun {
       pats(g.omlPatterns, col("oml_model")) || pats(g.rulePatterns, col("rule_key"))
     }
 
+    // a NULL match (no oml_model, no rule matchers) is no match
     val anyBizMatch: Column =
-      p.business.map(matchCol).reduceOption(_ || _).getOrElse(lit(false))
+      coalesce(p.business.map(matchCol).reduceOption(_ || _).getOrElse(lit(false)), lit(false))
     val interceptFrames = Vector.newBuilder[DataFrame]
+
+    // counted on the group input, before the keep filter: the write
+    // that fills the observation also yields intercepted = input - rows
+    def observed(input: DataFrame, keep: Column): (DataFrame, Observation) = {
+      val obs = Observation()
+      (input.observe(obs, count(lit(1)).as("input"), count(when(keep, 1)).as("rows"))
+        .filter(keep), obs)
+    }
 
     p.business.foreach { g =>
       val groupDf = parsed.filter(routable && matchCol(g))
-      groupIns += g.name -> groupDf
       g.sinks.foreach { s =>
-        val spec = SinkRouter.SinkSpec(s.name, s.filter, filterExpect = s.filterExpect,
-          preTags = Project.parseTags(s.tags), fmt = s.fmt)
-        val (biz0, icpt) = SinkRouter.route(groupDf, spec)
+        val keep = SinkRouter.keep(s.filter, s.filterExpect)
+        if (s.filter.isDefined) interceptFrames += groupDf.filter(!keep)
+        val (kept, obs) = observed(groupDf, keep)
         // pre_tags become fields on the record (append as FieldOut structs)
-        val biz = spec.preTags.foldLeft(biz0) { case (df, (k, v)) =>
+        val biz = Project.parseTags(s.tags).foldLeft(kept) { case (df, (k, v)) =>
           df.withColumn("fields", concat(col("fields"),
             array(struct(lit(k).as("name"), lit("chars").as("dtype"), lit(v).as("sval")))))
         }
         val path = s.path.getOrElse(s"out/${g.name}-${s.name}.dat")
-        val icptOpt = if (s.filter.isDefined) { interceptFrames += icpt; Some(icpt) } else None
-        out += RoutedSink(g.name, s.name, s.kind, path, fmtLine(s.fmt), biz, icptOpt)
+        out += RoutedSink(g.name, s.name, s.kind, path, fmtLine(s.fmt), biz, obs)
       }
     }
 
@@ -245,11 +219,11 @@ object ProjectRun {
     // reference infra sinks feed wprescue re-ingest with raw text
     def infra(name: String, df: DataFrame, rawCol: Option[Column] = None): Unit =
       p.infra.get(name).foreach { g =>
-        groupIns += g.name -> df
         g.sinks.foreach { s =>
           val line = if (s.fmt == "raw" && rawCol.isDefined) rawCol.get else fmtLine(s.fmt)
           val path = s.path.getOrElse(s"out/$name.dat")
-          out += RoutedSink(name, s.name, s.kind, path, line, df, None)
+          val (all, obs) = observed(df, lit(true))
+          out += RoutedSink(name, s.name, s.kind, path, line, all, obs)
         }
       }
 
@@ -260,7 +234,38 @@ object ProjectRun {
       Some(col("residue")))
     val icpts = interceptFrames.result()
     if (icpts.nonEmpty) infra("intercept", icpts.reduce(_ unionByName _))
-    RoutePlanOut(out.result(), groupIns.result())
+    out.result()
+  }
+
+  /** The one sink write, shared by batch (`sub = ""`), each daemon
+    * micro-batch (`sub = "/batch=<id>"`) and wprescue (`sub =
+    * "/rescued"`): every routed sink is written exactly once, as the
+    * part-file directory `<path>.d<sub>` (a blackhole sink through
+    * Spark's `noop` writer), and its report reads the counts that write
+    * observed — one job per sink. Overwrite makes a replayed `sub`
+    * directory idempotent (a daemon batch re-run after a checkpoint
+    * restart, a repeated rescue). */
+  private def writeSinks(p: Project.Loaded, plan: Vector[RoutedSink],
+                         sub: String): Vector[SinkReport] = {
+    plan.foreach { r =>
+      val w = r.df.select(r.line.as("value")).write.mode("overwrite")
+      if (r.kind == "blackhole") w.format("noop").save()
+      else w.text(Project.resolve(p.root, r.path + ".d" + sub).getPath)
+    }
+    // read after every write: the listener bus fills each observation
+    // while the later writes run, so no write waits on it
+    plan.map { r =>
+      val c = r.counts.get
+      val (input, rows) = (c("input").asInstanceOf[Long], c("rows").asInstanceOf[Long])
+      SinkReport(r.group, r.sink, r.path, rows, input - rows, expectOk = true)
+    }
+  }
+
+  /** Sinks the engine does not deliver fail the run before any job
+    * (`wproj check` reports the same problems). */
+  private def refuseUndelivered(p: Project.Loaded): Unit = {
+    val refused = Project.undelivered(p)
+    require(refused.isEmpty, refused.mkString("; "))
   }
 
   /** `wproj data check`: source connectivity — enabled file paths must
@@ -346,12 +351,13 @@ object ProjectRun {
   /** `wprescue` re-run: parse the rescue corpus with the project's
     * models and route the results through the PROJECT'S OWN sink
     * routing (reference wprescue: "output to targets according to the
-    * configured sink routing"). File sinks append via a `rescued`
-    * subdir inside the sharded part dir — `readSinkLines` recurses, so
+    * configured sink routing"). [[writeSinks]] appends via a `rescued`
+    * subdir inside each sink's part dir — `readSinkLines` recurses, so
     * the sink's view is original ∪ rescued, while re-running the
     * rescue stays idempotent (the subdir overwrites itself). */
   def runRescue(spark: SparkSession, p: Project.Loaded,
                 knowDb: KnowDb = KnowDb.empty): Vector[SinkReport] = {
+    refuseUndelivered(p)
     val base = Project.resolve(p.root, p.conf.rescuePath.getOrElse("./rescue"))
     val dirs = Seq("miss", "error", "residue").map(n => new File(base, n + ".d"))
       .filter(_.isDirectory).map(_.getPath)
@@ -360,45 +366,8 @@ object ProjectRun {
     val parsed = Pipeline.run(lines, "raw_line", p.wplSource, p.omlSources.map(_._2),
       keep = Seq("raw_line"), knowDb = knowDb,
       semanticEnabled = p.conf.semanticEnabled).persist()
-    try {
-      val plan = routePlanFull(p, parsed)
-      plan.sinks.map { r =>
-        val out = Project.resolve(p.root, r.path)
-        val rows =
-          if (r.kind != "file") r.df.count()
-          else {
-            r.df.select(r.line.as("value")).write.mode("overwrite")
-              .text(out.getPath + ".d/rescued")
-            r.df.count()
-          }
-        SinkReport(r.group, r.sink, r.path, rows,
-          r.intercepted.map(_.count()).getOrElse(0L), expectOk = true)
-      }
-    } finally parsed.unpersist()
-  }
-
-  /** Part-file-directory sink write for multi-executor scale (one
-    * merged file serializes the output through a single task). Row
-    * count comes from the (persisted) routed frame, not a re-read of
-    * the output. */
-  private def writeSharded(df: DataFrame, line: Column, out: File): Long = {
-    df.select(line.as("value")).write.mode("overwrite").text(out.getPath + ".d")
-    df.count()
-  }
-
-  private def routeAndWrite(p: Project.Loaded, parsed: DataFrame,
-                            sharded: Boolean): Vector[SinkReport] = {
-    val plan = routePlanFull(p, parsed)
-    val reports = plan.sinks.map { r =>
-      val out = Project.resolve(p.root, r.path)
-      val rows =
-        if (r.kind != "file") r.df.count() // kafka/tcp/syslog/blackhole: count-only in batch
-        else if (sharded) writeSharded(r.df, r.line, out)
-        else writeText(r.df, r.line, out)
-      val nIcpt = r.intercepted.map(_.count()).getOrElse(0L)
-      SinkReport(r.group, r.sink, r.path, rows, nIcpt, expectOk = true)
-    }
-    validateExpects(p, parsed, plan, reports)
+    try writeSinks(p, routePlan(p, parsed), "/rescued")
+    finally parsed.unpersist()
   }
 
   /** Share-of-basis expect validation (reference GroupExpectSpec +
@@ -408,22 +377,24 @@ object ProjectRun {
     * the group), `total_input` (all parsed records), or `mdl:<name>`
     * (records transformed by that model) — gates on `min_samples`, and
     * caps the total share of expect-less sinks via `others_max`.
-    * `mode` decides enforcement (warn = report only). */
+    * `mode` decides enforcement (warn = report only). The group_input
+    * basis is the input every sink of the group observed while it was
+    * written (`rows + intercepted`); `total_input` and `mdl:` run a
+    * count only when an expect needs them. */
   private def validateExpects(p: Project.Loaded, parsed: DataFrame,
-                              plan: RoutePlanOut,
                               reports: Vector[SinkReport]): Vector[SinkReport] = {
     val groups = (p.business ++ p.infra.values).map(g => g.name -> g).toMap
+    val groupInput = reports.groupBy(_.group).map { case (g, rs) =>
+      g -> (rs.head.rows + rs.head.intercepted)
+    }
     lazy val totalInput = parsed.count()
-    val groupInputCache = scala.collection.mutable.Map.empty[String, Long]
     val modelCache = scala.collection.mutable.Map.empty[String, Long]
     def basisOf(gName: String, ge: Project.GroupExpect): Long = ge.basis match {
       case "total_input" => totalInput
       case b if b.startsWith("mdl:") =>
         val m = b.drop(4).trim
         modelCache.getOrElseUpdate(m, parsed.filter(col("oml_model") === m).count())
-      case _ =>
-        groupInputCache.getOrElseUpdate(gName,
-          plan.groupInputs.get(gName).map(_.count()).getOrElse(0L))
+      case _ => groupInput.getOrElse(gName, 0L)
     }
     // others_max: per group, total share of sinks WITHOUT their own
     // expect must stay within the cap
@@ -442,7 +413,7 @@ object ProjectRun {
       val group = groups.get(r.group)
       val ge = group.flatMap(_.expect).getOrElse(Project.GroupExpect())
       val sinkExpect = group.flatMap(_.sinks.find(_.name == r.sink)).flatMap(_.expect)
-      val basis = basisOf(r.group, ge)
+      lazy val basis = basisOf(r.group, ge)
       val skip = ge.minSamples.exists(basis < _)
       val shareOk = skip || sinkExpect.forall(_.ok(r.rows, basis))
       val othersOk = skip || sinkExpect.isDefined || !othersViolated(r.group)
@@ -455,14 +426,18 @@ object ProjectRun {
   /** Run the project as a streaming daemon (reference `wparse daemon`):
     * every enabled source becomes a stream (file tail, syslog DSv2
     * socket source, kafka), parsed with per-source tags, unioned, and
-    * routed per micro-batch through the SAME `routePlan` as batch.
+    * routed per micro-batch through the SAME `routePlan` and
+    * [[writeSinks]] as batch.
     *
-    * Sink files are append-mode text DIRECTORIES named `<path>.d`
-    * (Spark's streaming writer shards parts per batch/partition; the
-    * reference appends to a single file — a single-writer shape that
-    * doesn't scale past one node, so the directory form is the
-    * distributed equivalent). */
-  /** `statPrint` = the reference's `-p/--print_stat`: per-micro-batch
+    * Each micro-batch writes every sink's `<path>.d/batch=<id>`
+    * directory (the reference appends to a single file — a
+    * single-writer shape that doesn't scale past one node, so the
+    * directory form is the distributed equivalent). A batch replayed
+    * after a checkpoint restart overwrites its own directory instead of
+    * appending duplicates: effective exactly-once on the file sink (the
+    * standard idempotent-foreachBatch shape).
+    *
+    * `statPrint` = the reference's `-p/--print_stat`: per-micro-batch
     * status counts echo to the console alongside the monitor sink. */
   def runStream(spark: SparkSession, p: Project.Loaded,
                 knowDb: KnowDb = KnowDb.empty,
@@ -471,6 +446,7 @@ object ProjectRun {
                 triggerMs: Long = 1000L,
                 statPrint: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.streaming.StreamingPipeline
+    refuseUndelivered(p)
     val fileStreams = p.fileSources.filter(_.enable).map { s =>
       val f = Project.resolve(p.root, s.path)
       // the streaming file source wants a directory: watch the parent,
@@ -524,16 +500,7 @@ object ProjectRun {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
         try {
-          routePlan(p, batch).foreach { r =>
-            if (r.kind == "file" && !r.df.isEmpty) {
-              // idempotent per-batch subdir: a batch replayed after a
-              // checkpoint restart OVERWRITES its own directory instead
-              // of appending duplicates → effective exactly-once on the
-              // file sink (the standard idempotent-foreachBatch shape)
-              val dir = Project.resolve(p.root, r.path + s".d/batch=$batchId")
-              r.df.select(r.line.as("value")).write.mode("overwrite").text(dir.getPath)
-            }
-          }
+          writeSinks(p, routePlan(p, batch), s"/batch=$batchId")
           if (statPrint)
             batch.groupBy(col("status")).count().orderBy(col("status"))
               .collect().foreach(r =>

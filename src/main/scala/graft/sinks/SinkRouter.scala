@@ -127,12 +127,22 @@ object SinkRouter {
     val tagged = spec.preTags.foldLeft(batch) { case (df, (k, v)) =>
       df.withColumn(k, lit(v))
     }
-    spec.filter match {
-      case None => (tagged, tagged.limit(0))
-      case Some(src) =>
-        val cond = if (spec.filterExpect) compile(src) else !compile(src)
-        (tagged.filter(cond), tagged.filter(!cond))
+    if (spec.filter.isEmpty) (tagged, tagged.limit(0))
+    else {
+      val cond = keep(spec.filter, spec.filterExpect)
+      (tagged.filter(cond), tagged.filter(!cond))
     }
+  }
+
+  /** The records a sink keeps (the rest go to intercept): its filter,
+    * flipped unless `filter_expect`; no filter keeps all. A condition
+    * over a field the record lacks is NULL — it counts as not matching,
+    * so every record lands in exactly one of the sink and its intercept. */
+  def keep(filter: Option[String], filterExpect: Boolean): Column = filter match {
+    case None => lit(true)
+    case Some(src) =>
+      val matched = coalesce(compile(src), lit(false))
+      if (filterExpect) matched else !matched
   }
 
   /** foreachBatch-style fanout: persist once, write N times (reference

@@ -80,7 +80,7 @@ object ProjectScaleSmoke {
 
     val t1 = System.nanoTime()
     val p = graft.project.Project.load(root.toString)
-    val reports = graft.project.ProjectRun.runBatch(spark, p) // sharded by default
+    val reports = graft.project.ProjectRun.runBatch(spark, p) // part-dir per sink
     val tRun = (System.nanoTime() - t1) / 1e9
     val total = reports.map(_.rows).sum
     println(f"PROJ-SCALE e2e: $n lines in $tRun%.1f s (${n / tRun / 1e6}%.2f M rec/s, " +

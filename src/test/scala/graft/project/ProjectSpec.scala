@@ -181,8 +181,16 @@ class ProjectSpec extends AnyFunSuite {
         |use = "file_raw_sink"
         |params = { file = "bad.dat" }
         |""".stripMargin)
+    // an option key the OML parser cannot read is an error at its
+    // position, not a loop that never advances
+    val badOml = "name : m\n---\nst : digit = take(option:[http/status]) ;"
+    val e = intercept[Exception](graft.oml.OmlText.parse(badOml))
+    assert(e.getMessage.contains("unexpected '/'"), e.getMessage)
+    write(root, "oml/bad.oml", badOml)
     val problems = Project.check(Project.load(root.toString))
     assert(problems.exists(_.contains("matches no loaded model")))
+    assert(problems.exists(m => m.startsWith("oml 'bad'") && m.contains("unexpected '/'")),
+      problems.mkString("; "))
   }
 
   test("runBatch: routed writes, intercept divert, expects validated") {
@@ -220,6 +228,122 @@ class ProjectSpec extends AnyFunSuite {
     // not enforced)
     assert(!byName("m_group/m_err").expectOk)
     assert(reports.filter(r => r.group != "m_group" || r.sink != "m_err").forall(_.expectOk))
+
+    // a filter over a field some records lack: the lacking record is
+    // not a match, so it is intercepted — every group record lands in
+    // exactly one of the sink and intercept
+    val root2 = modernProject()
+    Files.writeString(root2.resolve("src_dat/gen.dat"),
+      Files.readString(root2.resolve("src_dat/gen.dat")) + "\nuser=dave st=200")
+    val m = root2.resolve("topology/sinks/business.d/m.toml")
+    Files.writeString(m, Files.readString(m) +
+      """
+        |[[sink_group.sinks]]
+        |name = "m_read"
+        |use = "file_raw_sink"
+        |params = { file = "m_read.dat" }
+        |filter = "$op == chars(read)"
+        |""".stripMargin)
+    val byName2 = ProjectRun.runBatch(spark, Project.load(root2.toString))
+      .map(r => s"${r.group}/${r.sink}" -> r).toMap
+    val read = byName2("m_group/m_read")
+    assert(byName2("m_group/m_all").rows == 4)
+    assert(read.rows == 1 && read.intercepted == 3, read)
+    assert(ProjectRun.readSinkLines(root2.resolve("out/m_read.dat").toFile).size == 1)
+    val icpt = ProjectRun.readSinkLines(root2.resolve("out/intercept.dat").toFile)
+    assert(icpt.size == byName2("m_group/m_err").intercepted + read.intercepted)
+    assert(icpt.count(_.contains("\"user\":\"dave\"")) == 2, icpt)
+  }
+
+  test("runBatch: a record with no OML model reaches the default sink") {
+    val root = modernProject()
+    // three rules, models for two: the /x/pair records transform under
+    // no model and match no business group
+    write(root, "wpl/parse.wpl",
+      """package /t { rule kv { (kvarr) } }
+        |package /j { rule js { (json) } }
+        |package /x { rule pair { (ip:src, digit:code) } }
+        |""".stripMargin)
+    write(root, "oml/n.oml", "name : n\nrule : /j/*\n---\n* = take() ;\n")
+    write(root, "topology/sinks/business.d/m.toml",
+      """version = "2.0"
+        |[sink_group]
+        |name = "m_group"
+        |oml = ["m", "n"]
+        |[[sink_group.sinks]]
+        |name = "m_all"
+        |use = "file_raw_sink"
+        |params = { file = "m_all.dat" }
+        |""".stripMargin)
+    val lines = Seq("user=alice st=200 op=read", """{"k":1}""", "10.0.0.1 200",
+      "user=bob st=404 op=write", "10.0.0.2 404", "%%% unparseable %%% ###")
+    write(root, "src_dat/gen.dat", lines.mkString("\n"))
+    val p = Project.load(root.toString)
+    assert(Project.check(p).isEmpty, Project.check(p).mkString("; "))
+    val rows = ProjectRun.runBatch(spark, p).map(r => r.group -> r.rows).toMap
+    // every line lands in exactly one of business/default/miss/error
+    assert(Seq("m_group", "default", "miss", "error").map(rows.getOrElse(_, 0L)).sum ==
+      lines.size, rows)
+    assert(rows("m_group") == 3 && rows("miss") == 1, rows)
+    val default = ProjectRun.readSinkLines(root.resolve("out/default.dat").toFile)
+    assert(default.size == 2 && default.forall(_.contains("\"src\":\"10.0.0.")), default)
+  }
+
+  test("a sink kind that is not delivered fails check, and runBatch writes nothing") {
+    val root = modernProject()
+    write(root, "connectors/sink.d/10-tcp.toml",
+      """[[connectors]]
+        |id = "tcp_sink"
+        |type = "tcp"
+        |allow_override = ["port"]
+        |[connectors.params]
+        |addr = "127.0.0.1"
+        |port = 9000
+        |""".stripMargin)
+    write(root, "topology/sinks/business.d/t.toml",
+      """version = "2.0"
+        |[sink_group]
+        |name = "t_group"
+        |oml = ["m"]
+        |[[sink_group.sinks]]
+        |name = "t_net"
+        |use = "tcp_sink"
+        |""".stripMargin)
+    val p = Project.load(root.toString)
+    assert(Project.check(p).exists(m =>
+      m.contains("t_group/t_net") && m.contains("kind 'tcp' is not delivered")),
+      Project.check(p).mkString("; "))
+    val e = intercept[IllegalArgumentException](ProjectRun.runBatch(spark, p))
+    assert(e.getMessage.contains("t_group/t_net"))
+    assert(!root.resolve("out").toFile.exists, "runBatch wrote output")
+  }
+
+  test("job counts: one Spark job per routed sink in batch and per daemon micro-batch") {
+    val sc = spark.sparkContext
+    // m_all, m_err, default, miss, intercept (monitor is daemon-only)
+    val routed = 5
+    val byGroup = new org.apache.spark.JobsByProperty(sc, "spark.jobGroup.id")
+    val byQuery = new org.apache.spark.JobsByProperty(sc, "sql.streaming.queryId")
+    try {
+      val group = s"project-jobs-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "runBatch")
+      try ProjectRun.runBatch(spark, Project.load(modernProject().toString))
+      finally sc.clearJobGroup()
+      assert(byGroup(group) == routed)
+
+      // one micro-batch (the source is one file): no jobs beyond one per
+      // routed sink, plus the monitor aggregate's map and result jobs
+      def daemonJobs(root: Path): Int = {
+        val q = ProjectRun.runStream(spark, Project.load(root.toString), triggerMs = 100L)
+        try q.processAllAvailable() finally q.stop()
+        assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+        byQuery(q.id.toString)
+      }
+      val noMonitor = modernProject()
+      Files.delete(noMonitor.resolve("topology/sinks/infra.d/monitor.toml"))
+      assert(daemonJobs(noMonitor) == routed)
+      assert(daemonJobs(modernProject()) <= routed + 2)
+    } finally { byGroup.close(); byQuery.close() }
   }
 
   test("legacy layout: root sink.toml + framework.toml + infra.d (reference tests/instance shape)") {
