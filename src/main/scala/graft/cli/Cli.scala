@@ -1376,47 +1376,15 @@ object Cli {
     violations
   }
 
-  private def writeChannels(parsed: DataFrame, out: String): Unit = {
-    // dtype-aware native json (Formatters.line): digit/float/bool/obj/
-    // array fields embed UNQUOTED, matching the reference's typed json
-    // sink and the project sink path — the old shape rebuilt every
-    // field as a WChars and emitted "st":"200" through a per-row UDF
-    val fmtJson = Formatters.line("json", col("fields"))
-    // ONE pass over the parse, no cache: the old shape persisted the
-    // full parsed corpus and re-read it four times (one write per
-    // channel) — at 20M lines the columnar cache build OOMed a
-    // 32-thread/8 GB JVM, and at 100 TB a corpus-sized cache between
-    // write passes is exactly what a batch job cannot afford. Each row
-    // fans out to its channels map-side (a Partial carries its record
-    // to main AND its residue to the residue channel — reference
-    // ProcessResult::Partial), then a single partitioned text write
-    // streams every channel out together.
-    val chans = array(
-      when(col("status") === "ok" || col("status") === "default" ||
-          col("status") === "residue-only",
-        struct(lit("main").as("ch"), fmtJson.as("value"))),
-      when(col("status") === "miss",
-        struct(lit("miss").as("ch"), col("err_hint").as("value"))),
-      when(col("residue").isNotNull && col("residue") =!= "",
-        struct(lit("residue").as("ch"), col("residue").as("value"))),
-      when(col("status") === "error",
-        struct(lit("error").as("ch"), col("err_hint").as("value"))))
-    parsed
-      .select(explode(filter(chans, c => c.isNotNull)).as("c"))
-      .select(col("c.value").as("value"), col("c.ch").as("ch"))
-      .write.mode("overwrite").partitionBy("ch").text(out)
-    // restore the documented layout: out/<channel> (not out/ch=<channel>),
-    // every channel dir present even when empty
-    val conf = parsed.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
-    for (ch <- Seq("main", "miss", "residue", "error")) {
-      val part = new org.apache.hadoop.fs.Path(s"$out/ch=$ch")
-      val target = new org.apache.hadoop.fs.Path(s"$out/$ch")
-      // rename must not fail silently: on object stores a false return
-      // leaves the channel missing or nested with no error
-      if (fs.exists(part)) require(fs.rename(part, target),
-        s"writeChannels: rename $part -> $target failed")
-      else fs.mkdirs(target)
-    }
-  }
+  /** `wparse batch` channels out/{main,miss,residue,error} (each present
+    * even when empty) in ONE pass over the uncached parse; a Partial
+    * reaches main AND residue (reference ProcessResult::Partial). */
+  private def writeChannels(parsed: DataFrame, out: String): Unit =
+    SinkRouter.writeFanout(parsed, s"$out/_fanout", Seq(
+      "main" -> (Formatters.line("json", col("fields")),
+        col("status").isin("ok", "default", "residue-only")),
+      "miss" -> (col("err_hint"), col("status") === "miss"),
+      "residue" -> (col("residue"), col("residue").isNotNull && col("residue") =!= ""),
+      "error" -> (col("err_hint"), col("status") === "error"))
+      .map { case (ch, (line, w)) => SinkRouter.Channel(s"$out/$ch", line, Seq(w)) })
 }

@@ -1,11 +1,13 @@
 package graft.project
 
 import java.io.File
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.engine.Pipeline
 import graft.oml.KnowDb
-import graft.sinks.SinkRouter
+import graft.sinks.{Formatters, SinkRouter}
 
 /** Batch execution of a loaded project instance (reference `wparse
   * batch` over a wp-proj work root — `crates/wp-proj/src/wparse`):
@@ -20,11 +22,11 @@ import graft.sinks.SinkRouter
   *     - unmatched ok/default records → `default` infra; miss → `miss`;
   *       error → `error`; non-empty residue → `residue` (additionally).
   *
-  * The whole route stage is Column predicates over ONE persisted parsed
-  * frame — each sink is a filtered projection written once by
-  * [[writeSinks]], so the plan stays a scan→narrow-select per sink with
-  * no shuffle and one job; at 100 TB this is the same shape as the
-  * reference's per-sink channel fanout.
+  * The whole route stage is Column predicates over the parsed record:
+  * [[writeSinks]] explodes each record into the lines of the sinks it
+  * reaches, all written and counted in ONE pass (no persist, no
+  * shuffle, one job per run and per daemon micro-batch) — at 100 TB
+  * the same shape as the reference's per-record channel fanout.
   *
   * Sink fmt rides the generic (name, dtype, sval) field triples; `time`
   * renders as epoch-micros and nested obj/array as their canonical JSON
@@ -40,16 +42,7 @@ object ProjectRun {
                               rows: Long, intercepted: Long, expectOk: Boolean,
                               expectEnforced: Boolean = false)
 
-  /** Format one record's fields for a sink. dtypes digit/float/bool and
-    * the JSON-shaped obj/array embed unquoted in json fmt (matches
-    * Formatters.json over live WValues for every scalar the corpus
-    * emits). The expression lives in [[graft.sinks.Formatters.line]] so
-    * the quick paths (wparse batch channels, kafka wrapper) emit the
-    * same typed output. */
-  private def fmtLine(fmt: String): Column =
-    graft.sinks.Formatters.line(fmt, col("fields"))
-
-  /** Rule-target wildcard → anchored regex for Column rlike. */
+  /** Rule-target wildcard → anchored regex. */
   private def globToRegex(pat: String): String =
     "^" + java.util.regex.Pattern.quote(pat).replace("*", "\\E.*\\Q") + "$"
 
@@ -112,11 +105,12 @@ object ProjectRun {
     }
   }
 
-  /** Run the project in batch over its enabled file sources: parse
-    * once (persisted), then [[writeSinks]] writes every routed sink once
-    * as a part-file directory `<path>.d`. Returns per-sink reports (rows,
-    * intercepts, expect validation). A sink kind that is not delivered
-    * ([[Project.undelivered]]) refuses the run before any job.
+  /** Run the project in batch over its enabled file sources: one
+    * [[writeSinks]] pass parses once and writes every routed sink as a
+    * part-file directory `<path>.d` (plus the `[rescue].path` capture).
+    * Returns per-sink reports (rows, intercepts, expect validation). A
+    * sink kind that is not delivered ([[Project.undelivered]]) refuses
+    * the run before any job.
     *
     * `maxLines` = the reference's `-n/--max_line` picker cap (applies
     * per source, as each reference picker consumes its own budget);
@@ -147,32 +141,25 @@ object ProjectRun {
         keep = Seq("raw_line"), knowDb = knowDb, sourceTags = metaTags(s.key, s.tags),
         enricher = enricher,
         semanticEnabled = p.conf.semanticEnabled)) // [semantic].enabled, default off
-    }.reduce(_ unionByName _).persist()
-    try {
-      val reports = validateExpects(p, parsed, writeSinks(p, routePlan(p, parsed), ""))
-      // [rescue].path capture: failed payloads feed a later `wprescue`
-      writeRescue(p, parsed)
-      if (statPrint)
-        parsed.groupBy(col("status")).count().orderBy(col("status"))
-          .collect().foreach(r => println(s"[stat] status=${r.get(0)} count=${r.get(1)}"))
-      reports
-    } finally parsed.unpersist()
+    }.reduce(_ unionByName _)
+    val w = writeSinks(p, parsed, "", rescue = true, statusCounts = statPrint)
+    if (statPrint)
+      w.byStatus.foreach { case (st, n) => println(s"[stat] status=$st count=$n") }
+    validateExpects(p, w)
   }
 
-  /** One routed sink: the frame it writes (its group's input, observed,
-    * then kept by the sink's filter), the line-formatting column, and
-    * the observation of that input — `input` records entered, `rows`
-    * kept — which the sink's own write fills. */
+  /** One routed sink: its line, the conditions under which a record
+    * emits it (intercept has one per filtered sink) and, for a filtered
+    * business sink, the condition of a record it diverts. */
   final case class RoutedSink(group: String, sink: String, kind: String,
-                              path: String, line: Column, df: DataFrame,
-                              counts: Observation)
+                              path: String, line: Column, emits: Vector[Column],
+                              diverted: Option[Column] = None)
 
-  /** Build the full routing plan over a parsed frame — shared by batch,
-    * streaming (per micro-batch) and rescue. Pure plan construction:
-    * every entry is a filtered projection of `parsed`, no actions. */
-  def routePlan(p: Project.Loaded, parsed: DataFrame): Vector[RoutedSink] = {
+  /** The full routing plan — shared by batch, streaming (per
+    * micro-batch) and rescue: Column predicates only, no action. */
+  def routePlan(p: Project.Loaded): Vector[RoutedSink] = {
     val out = Vector.newBuilder[RoutedSink]
-    val routable = col("status").isin("ok", "default", "residue-only")
+    val routable = col("status").isin(Routable: _*)
 
     // group match predicate over (oml_model, rule_key) wildcards
     def matchCol(g: Project.SinkGroup): Column = {
@@ -188,77 +175,110 @@ object ProjectRun {
     // a NULL match (no oml_model, no rule matchers) is no match
     val anyBizMatch: Column =
       coalesce(p.business.map(matchCol).reduceOption(_ || _).getOrElse(lit(false)), lit(false))
-    val interceptFrames = Vector.newBuilder[DataFrame]
-
-    // counted on the group input, before the keep filter: the write
-    // that fills the observation also yields intercepted = input - rows
-    def observed(input: DataFrame, keep: Column): (DataFrame, Observation) = {
-      val obs = Observation()
-      (input.observe(obs, count(lit(1)).as("input"), count(when(keep, 1)).as("rows"))
-        .filter(keep), obs)
-    }
+    val diverts = Vector.newBuilder[Column]
 
     p.business.foreach { g =>
-      val groupDf = parsed.filter(routable && matchCol(g))
+      val member = routable && matchCol(g)
       g.sinks.foreach { s =>
         val keep = SinkRouter.keep(s.filter, s.filterExpect)
-        if (s.filter.isDefined) interceptFrames += groupDf.filter(!keep)
-        val (kept, obs) = observed(groupDf, keep)
-        // pre_tags become fields on the record (append as FieldOut structs)
-        val biz = Project.parseTags(s.tags).foldLeft(kept) { case (df, (k, v)) =>
-          df.withColumn("fields", concat(col("fields"),
-            array(struct(lit(k).as("name"), lit("chars").as("dtype"), lit(v).as("sval")))))
+        val diverted = s.filter.map(_ => member && !keep)
+        diverted.foreach(diverts += _)
+        // pre_tags become fields on the record (appended FieldOut structs)
+        val fields = Project.parseTags(s.tags).foldLeft(col("fields")) { case (fs, (k, v)) =>
+          concat(fs, array(struct(lit(k).as("name"), lit("chars").as("dtype"), lit(v).as("sval"))))
         }
         val path = s.path.getOrElse(s"out/${g.name}-${s.name}.dat")
-        out += RoutedSink(g.name, s.name, s.kind, path, fmtLine(s.fmt), biz, obs)
+        out += RoutedSink(g.name, s.name, s.kind, path,
+          Formatters.line(s.fmt, fields), Vector(member && keep), diverted)
       }
     }
 
     // infra channels: `raw` fmt emits the channel's raw payload
     // (original line for miss/error, residue text for residue) —
     // reference infra sinks feed wprescue re-ingest with raw text
-    def infra(name: String, df: DataFrame, rawCol: Option[Column] = None): Unit =
+    def infra(name: String, emits: Vector[Column], rawCol: Option[Column] = None): Unit =
       p.infra.get(name).foreach { g =>
         g.sinks.foreach { s =>
-          val line = if (s.fmt == "raw" && rawCol.isDefined) rawCol.get else fmtLine(s.fmt)
-          val path = s.path.getOrElse(s"out/$name.dat")
-          val (all, obs) = observed(df, lit(true))
-          out += RoutedSink(name, s.name, s.kind, path, line, all, obs)
+          val line = rawCol.filter(_ => s.fmt == "raw").getOrElse(Formatters.line(s.fmt, col("fields")))
+          out += RoutedSink(name, s.name, s.kind, s.path.getOrElse(s"out/$name.dat"), line, emits)
         }
       }
 
-    infra("default", parsed.filter(routable && !anyBizMatch))
-    infra("miss", parsed.filter(col("status") === "miss"), Some(col("raw_line")))
-    infra("error", parsed.filter(col("status") === "error"), Some(col("raw_line")))
-    infra("residue", parsed.filter(col("residue").isNotNull && col("residue") =!= ""),
-      Some(col("residue")))
-    val icpts = interceptFrames.result()
-    if (icpts.nonEmpty) infra("intercept", icpts.reduce(_ unionByName _))
+    infra("default", Vector(routable && !anyBizMatch))
+    infra("miss", Vector(isMiss), Some(col("raw_line")))
+    infra("error", Vector(isError), Some(col("raw_line")))
+    infra("residue", Vector(hasResidue), Some(col("residue")))
+    val icpts = diverts.result()
+    if (icpts.nonEmpty) infra("intercept", icpts)
     out.result()
+  }
+
+  private val Routable = Seq("ok", "default", "residue-only")
+  private val isMiss = col("status") === "miss"
+  private val isError = col("status") === "error"
+  private val hasResidue = col("residue").isNotNull && col("residue") =!= ""
+
+  /** Records per (status, rule_key) — the monitor's, `[[stat]]`'s and
+    * `-p`'s counts — as one observed aggregate (statuses × rules). */
+  private object StatusRuleCounts
+      extends Aggregator[(String, String), Map[(String, String), Long], Map[(String, String), Long]] {
+    type Counts = Map[(String, String), Long]
+    def zero: Counts = Map.empty
+    def reduce(b: Counts, k: (String, String)): Counts = b.updated(k, b.getOrElse(k, 0L) + 1)
+    def merge(a: Counts, b: Counts): Counts =
+      b.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+    def finish(b: Counts): Counts = b
+    def bufferEncoder: Encoder[Counts] = ExpressionEncoder[Counts]()
+    def outputEncoder: Encoder[Counts] = ExpressionEncoder[Counts]()
+  }
+
+  /** What one [[writeSinks]] pass observed: per-sink reports and the
+    * `total_input`, `mdl:<model>` and (if asked for) per-(status,
+    * rule_key) counts. */
+  private final case class Written(reports: Vector[SinkReport], observed: Map[String, Any]) {
+    def count(k: String): Long = observed(k).asInstanceOf[Long]
+    def byStatusRule: Map[(String, String), Long] = observed.get("by_status_rule").toSeq
+      .flatMap(_.asInstanceOf[scala.collection.Map[Row, Long]])
+      .map { case (k, n) => (k.getString(0), k.getString(1)) -> n }.toMap
+    def byStatus = byStatusRule.groupMapReduce(_._1._1)(_._2)(_ + _).toVector.sortBy(_._1)
   }
 
   /** The one sink write, shared by batch (`sub = ""`), each daemon
     * micro-batch (`sub = "/batch=<id>"`) and wprescue (`sub =
-    * "/rescued"`): every routed sink is written exactly once, as the
-    * part-file directory `<path>.d<sub>` (a blackhole sink through
-    * Spark's `noop` writer), and its report reads the counts that write
-    * observed — one job per sink. Overwrite makes a replayed `sub`
-    * directory idempotent (a daemon batch re-run after a checkpoint
-    * restart, a repeated rescue). */
-  private def writeSinks(p: Project.Loaded, plan: Vector[RoutedSink],
-                         sub: String): Vector[SinkReport] = {
-    plan.foreach { r =>
-      val w = r.df.select(r.line.as("value")).write.mode("overwrite")
-      if (r.kind == "blackhole") w.format("noop").save()
-      else w.text(Project.resolve(p.root, r.path + ".d" + sub).getPath)
-    }
-    // read after every write: the listener bus fills each observation
-    // while the later writes run, so no write waits on it
-    plan.map { r =>
-      val c = r.counts.get
-      val (input, rows) = (c("input").asInstanceOf[Long], c("rows").asInstanceOf[Long])
-      SinkReport(r.group, r.sink, r.path, rows, input - rows, expectOk = true)
-    }
+    * "/rescued"`): ONE [[SinkRouter.writeFanout]] job over the
+    * unpersisted parse writes every routed sink's `<path>.d<sub>` (a
+    * blackhole sink is only counted) and, with `rescue`, the
+    * `<[rescue].path>/<ch>.d<sub>` channels; every count is one
+    * observation on that pass. A replayed `sub` is replaced. */
+  private def writeSinks(p: Project.Loaded, parsed: DataFrame, sub: String,
+                         rescue: Boolean = false,
+                         statusCounts: Boolean = false): Written = {
+    val plan = routePlan(p)
+    def n(c: Column): Column = count(when(c, 1))
+    val models = (p.business ++ p.infra.values).flatMap(_.expect).map(_.basis)
+      .filter(_.startsWith("mdl:")).map(_.drop(4).trim).distinct
+    val statusRule = udaf(StatusRuleCounts, Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    val metrics = count(lit(1)).as("total_input") +: (plan.zipWithIndex.flatMap { case (r, k) =>
+      r.emits.map(n).reduce(_ + _).as(s"rows$k") +: r.diverted.map(n(_).as(s"diverted$k")).toSeq
+    } ++ models.map(m => n(col("oml_model") === m).as(s"mdl:$m")) ++
+      Option.when(statusCounts)(statusRule(col("status"), col("rule_key")).as("by_status_rule")))
+    val obs = Observation()
+    def dir(path: String): String = Project.resolve(p.root, path + sub).getPath
+    val rescueChannels = for {
+      rp <- p.conf.rescuePath.filter(_ => rescue).toSeq
+      (ch, line, w) <- Seq(("miss", col("raw_line"), isMiss),
+        ("error", col("raw_line"), isError), ("residue", col("residue"), hasResidue))
+    } yield SinkRouter.Channel(dir(s"$rp/$ch.d"), line, Seq(w))
+    SinkRouter.writeFanout(parsed.observe(obs, metrics.head, metrics.tail: _*),
+      Project.resolve(p.root, s"out/_fanout-${java.util.UUID.randomUUID}").getPath,
+      plan.filter(_.kind != "blackhole").map(r =>
+        SinkRouter.Channel(dir(r.path + ".d"), r.line, r.emits)) ++ rescueChannels)
+    val observed = obs.get
+    def got(k: String): Long = observed(k).asInstanceOf[Long]
+    Written(plan.zipWithIndex.map { case (r, k) =>
+      SinkReport(r.group, r.sink, r.path, got(s"rows$k"),
+        r.diverted.fold(0L)(_ => got(s"diverted$k")), expectOk = true)
+    }, observed)
   }
 
   /** Sinks the engine does not deliver fail the run before any job
@@ -331,27 +351,10 @@ object ProjectRun {
     problems.result()
   }
 
-  /** Engine-side rescue capture (reference `[rescue].path` in
-    * wparse.toml): failed records' raw payloads land under
-    * `<path>/<channel>.d` — the corpus `wprescue` re-ingests. No-op
-    * when the engine config has no rescue section. */
-  private def writeRescue(p: Project.Loaded, parsed: DataFrame,
-                          sub: String = ""): Unit =
-    p.conf.rescuePath.foreach { rp =>
-      val base = Project.resolve(p.root, rp)
-      def w(name: String, df: DataFrame, c: Column): Unit =
-        df.select(c.as("value")).write.mode("overwrite")
-          .text(new File(base, name + ".d" + sub).getPath)
-      w("miss", parsed.filter(col("status") === "miss"), col("raw_line"))
-      w("error", parsed.filter(col("status") === "error"), col("raw_line"))
-      w("residue", parsed.filter(col("residue").isNotNull && col("residue") =!= ""),
-        col("residue"))
-    }
-
   /** `wprescue` re-run: parse the rescue corpus with the project's
     * models and route the results through the PROJECT'S OWN sink
     * routing (reference wprescue: "output to targets according to the
-    * configured sink routing"). [[writeSinks]] appends via a `rescued`
+    * configured sink routing"). [[writeSinks]] adds a `rescued`
     * subdir inside each sink's part dir — `readSinkLines` recurses, so
     * the sink's view is original ∪ rescued, while re-running the
     * rescue stays idempotent (the subdir overwrites itself). */
@@ -365,9 +368,8 @@ object ProjectRun {
     val lines = spark.read.text(dirs: _*).withColumnRenamed("value", "raw_line")
     val parsed = Pipeline.run(lines, "raw_line", p.wplSource, p.omlSources.map(_._2),
       keep = Seq("raw_line"), knowDb = knowDb,
-      semanticEnabled = p.conf.semanticEnabled).persist()
-    try writeSinks(p, routePlan(p, parsed), "/rescued")
-    finally parsed.unpersist()
+      semanticEnabled = p.conf.semanticEnabled)
+    writeSinks(p, parsed, "/rescued").reports
   }
 
   /** Share-of-basis expect validation (reference GroupExpectSpec +
@@ -377,23 +379,19 @@ object ProjectRun {
     * the group), `total_input` (all parsed records), or `mdl:<name>`
     * (records transformed by that model) — gates on `min_samples`, and
     * caps the total share of expect-less sinks via `others_max`.
-    * `mode` decides enforcement (warn = report only). The group_input
-    * basis is the input every sink of the group observed while it was
-    * written (`rows + intercepted`); `total_input` and `mdl:` run a
-    * count only when an expect needs them. */
-  private def validateExpects(p: Project.Loaded, parsed: DataFrame,
-                              reports: Vector[SinkReport]): Vector[SinkReport] = {
+    * `mode` decides enforcement (warn = report only). Every basis is a
+    * count the sink write observed: group_input is what each sink of
+    * the group saw (`rows + intercepted`), `total_input` all parsed
+    * records, `mdl:<name>` that model's records. */
+  private def validateExpects(p: Project.Loaded, w: Written): Vector[SinkReport] = {
+    val reports = w.reports
     val groups = (p.business ++ p.infra.values).map(g => g.name -> g).toMap
     val groupInput = reports.groupBy(_.group).map { case (g, rs) =>
       g -> (rs.head.rows + rs.head.intercepted)
     }
-    lazy val totalInput = parsed.count()
-    val modelCache = scala.collection.mutable.Map.empty[String, Long]
     def basisOf(gName: String, ge: Project.GroupExpect): Long = ge.basis match {
-      case "total_input" => totalInput
-      case b if b.startsWith("mdl:") =>
-        val m = b.drop(4).trim
-        modelCache.getOrElseUpdate(m, parsed.filter(col("oml_model") === m).count())
+      case "total_input" => w.count("total_input")
+      case b if b.startsWith("mdl:") => w.count("mdl:" + b.drop(4).trim)
       case _ => groupInput.getOrElse(gName, 0L)
     }
     // others_max: per group, total share of sinks WITHOUT their own
@@ -429,16 +427,16 @@ object ProjectRun {
     * routed per micro-batch through the SAME `routePlan` and
     * [[writeSinks]] as batch.
     *
-    * Each micro-batch writes every sink's `<path>.d/batch=<id>`
-    * directory (the reference appends to a single file — a
-    * single-writer shape that doesn't scale past one node, so the
+    * Each micro-batch is ONE job writing every sink's
+    * `<path>.d/batch=<id>` directory (the reference appends to a single
+    * file — a single-writer shape that doesn't scale past one node, so the
     * directory form is the distributed equivalent). A batch replayed
     * after a checkpoint restart overwrites its own directory instead of
     * appending duplicates: effective exactly-once on the file sink (the
     * standard idempotent-foreachBatch shape).
     *
     * `statPrint` = the reference's `-p/--print_stat`: per-micro-batch
-    * status counts echo to the console alongside the monitor sink. */
+    * status counts (the write's observed ones) echo to the console. */
   def runStream(spark: SparkSession, p: Project.Loaded,
                 knowDb: KnowDb = KnowDb.empty,
                 enricher: graft.wpl.Enricher = graft.wpl.Enricher.empty,
@@ -498,58 +496,57 @@ object ProjectRun {
         checkpoint.getOrElse(new File(p.root, "out/_checkpoint").getPath))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          writeSinks(p, routePlan(p, batch), s"/batch=$batchId")
-          if (statPrint)
-            batch.groupBy(col("status")).count().orderBy(col("status"))
-              .collect().foreach(r =>
-                println(s"[stat] batch=$batchId status=${r.get(0)} count=${r.get(1)}"))
-          // [rescue].path capture per micro-batch (idempotent batch= dir)
-          writeRescue(p, batch, sub = s"/batch=$batchId")
-          // monitor sink: per-batch parse stats (reference wp-stats
-          // windowed counters → monitor infra group; the micro-batch IS
-          // the processing-time window here)
-          p.infra.get("monitor").foreach { g =>
-            val stats = batch.groupBy(col("status"), col("rule_key")).count()
-              .select(concat(lit(s"batch=$batchId status="), col("status"),
-                lit(" rule="), coalesce(col("rule_key"), lit("-")),
-                lit(" count="), col("count")).as("value"))
-            // config-targeted dimensions ([[stat.pick/parse/sink]] with
-            // key + target rule wildcard — 01-wparse.md:33-41): each dim
-            // adds its own keyed per-rule count lines
-            val dimStats = p.conf.statDims.map { d =>
-              val targeted =
-                if (d.target == "*") batch
-                else batch.filter(coalesce(col("rule_key"), lit(""))
-                  .rlike(globToRegex(d.target)))
-              val counted = d.stage match {
-                case "pick" => // records picked up, any parse outcome
-                  targeted.groupBy(col("rule_key")).count()
-                    .select(col("rule_key"), lit("-").as("dim"), col("count"))
-                case "sink" => // records that route to business sinks
-                  targeted.filter(col("status").isin("ok", "default", "residue-only"))
-                    .groupBy(col("rule_key")).count()
-                    .select(col("rule_key"), lit("-").as("dim"), col("count"))
-                case _ => // parse: per rule × outcome
-                  targeted.groupBy(col("rule_key"), col("status")).count()
-                    .select(col("rule_key"), col("status").as("dim"), col("count"))
-              }
-              counted.select(concat(
-                lit(s"batch=$batchId stat=${d.key} stage=${d.stage} rule="),
-                coalesce(col("rule_key"), lit("-")),
-                lit(" dim="), col("dim"), lit(" count="), col("count")).as("value"))
-            }
-            val allStats = dimStats.foldLeft(stats)(_ unionByName _)
-            g.sinks.filter(_.kind == "file").foreach { s =>
-              val dir = Project.resolve(p.root,
-                s.path.getOrElse("out/monitor.dat") + s".d/batch=$batchId")
-              allStats.write.mode("overwrite").text(dir.getPath)
-            }
+        // exactly ONE action over the unpersisted micro-batch: a second
+        // one would re-read the source (and double its numInputRows)
+        val monitor = p.infra.get("monitor")
+        val w = writeSinks(p, batch, s"/batch=$batchId", rescue = true,
+          statusCounts = statPrint || monitor.isDefined)
+        if (statPrint)
+          w.byStatus.foreach { case (st, n) => println(s"[stat] batch=$batchId status=$st count=$n") }
+        // monitor sink: per-batch parse stats (reference wp-stats
+        // windowed counters → monitor infra group; the micro-batch IS
+        // the processing-time window here), written from the driver
+        monitor.foreach { g =>
+          val lines = monitorLines(p, batchId, w.byStatusRule)
+          g.sinks.filter(_.kind == "file").foreach { s =>
+            writeDriverLines(spark, Project.resolve(p.root,
+              s.path.getOrElse("out/monitor.dat") + s".d/batch=$batchId").getPath, lines)
           }
-        } finally batch.unpersist()
-        ()
+        }
       }
       .start()
+  }
+
+  /** A micro-batch's monitor lines from its (status, rule_key) counts:
+    * one per pair, then the config-targeted dimensions
+    * (`[[stat.pick/parse/sink]]` key + target rule wildcard —
+    * 01-wparse.md:33-41) as keyed per-rule lines (`dim` = the status
+    * for `parse`, else `-`; `sink` counts routable records only). */
+  private def monitorLines(p: Project.Loaded, batchId: Long,
+                           counts: Map[(String, String), Long]): Vector[String] = {
+    def rule(r: String): String = Option(r).getOrElse("-")
+    val stats = counts.toVector.sortBy { case ((st, r), _) => (rule(r), st) }
+      .map { case ((st, r), n) => s"batch=$batchId status=$st rule=${rule(r)} count=$n" }
+    val dims = p.conf.statDims.flatMap { d =>
+      val target = globToRegex(d.target).r
+      counts.toVector.collect { case ((st, r), n) if
+          (d.target == "*" || target.matches(Option(r).getOrElse(""))) &&
+            (d.stage != "sink" || Routable.contains(st)) =>
+        (rule(r), if (d.stage == "parse") st else "-") -> n
+      }.groupMapReduce(_._1)(_._2)(_ + _).toVector.sortBy(_._1).map { case ((r, dim), n) =>
+        s"batch=$batchId stat=${d.key} stage=${d.stage} rule=$r dim=$dim count=$n"
+      }
+    }
+    stats ++ dims
+  }
+
+  /** Replace directory `dir` with one part file of `lines`, from the
+    * driver: no Spark job. */
+  private def writeDriverLines(spark: SparkSession, dir: String, lines: Seq[String]): Unit = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(d, true)
+    val out = fs.create(new org.apache.hadoop.fs.Path(d, "part-00000"))
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
   }
 }

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.engine.WplEngine
@@ -13,9 +14,9 @@ import graft.engine.WplEngine
   *  - per-sink filter/intercept: records matching the condition are
   *    diverted to the `intercept` infra sink; `filter_expect` flips
   *    polarity (docs/usage/en/02-config/03-sinks.md:26,67);
-  *  - fanout: one transformed batch written to N sinks — persist the
-  *    micro-batch once, then N filtered writes (foreachBatch pattern);
-  *    per-sink `pre_tags` appended as constant columns.
+  *  - fanout: one batch written to N sinks — [[fanout]] (flat daemon)
+  *    persists it for N filtered writes; [[writeFanout]] (project path,
+  *    `wparse batch`) writes every sink in ONE pass, with no persist.
   */
 object SinkRouter {
 
@@ -151,6 +152,38 @@ object SinkRouter {
   def fanout(batch: DataFrame, specs: Seq[SinkSpec]): Map[String, (DataFrame, DataFrame)] = {
     if (specs.length > 1) batch.persist()
     specs.map(s => s.name -> route(batch, s)).toMap
+  }
+
+  /** One [[writeFanout]] output directory: a record emits one `line`
+    * per `when` condition it meets. */
+  final case class Channel(target: String, line: Column, when: Seq[Column])
+
+  /** The one fan-out write: every record of `df` explodes into its
+    * channels' lines, written in ONE job partitioned by channel under
+    * `staging` (removed afterwards); each partition directory is then
+    * renamed to its `target`, replacing an existing one. A channel with
+    * no lines gets an empty directory; a false rename (object stores)
+    * fails the write. With nothing to emit the job is a `noop` write,
+    * so observations on `df` are still filled. */
+  def writeFanout(df: DataFrame, staging: String, channels: Seq[Channel]): Unit = {
+    val stage = new Path(staging)
+    val fs = stage.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val elems = for ((c, i) <- channels.zipWithIndex; w <- c.when)
+      yield when(w, struct(lit(i.toString).as("ch"), c.line.as("value")))
+    try {
+      if (elems.isEmpty) df.write.format("noop").mode("overwrite").save()
+      else df.select(explode(filter(array(elems: _*), _.isNotNull)).as("c"))
+        .select(col("c.value"), col("c.ch")).write.mode("overwrite").partitionBy("ch").text(staging)
+      for ((c, i) <- channels.zipWithIndex) {
+        val (part, target) = (new Path(stage, s"ch=$i"), new Path(c.target))
+        fs.delete(target, true)
+        if (!fs.exists(part)) fs.mkdirs(target)
+        else {
+          fs.mkdirs(target.getParent)
+          require(fs.rename(part, target), s"writeFanout: rename $part -> $target failed")
+        }
+      }
+    } finally fs.delete(stage, true)
   }
 
   /** Count-expectation validation (wproj parity — reference sink-group

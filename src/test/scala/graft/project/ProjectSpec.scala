@@ -252,6 +252,10 @@ class ProjectSpec extends AnyFunSuite {
     assert(ProjectRun.readSinkLines(root2.resolve("out/m_read.dat").toFile).size == 1)
     val icpt = ProjectRun.readSinkLines(root2.resolve("out/intercept.dat").toFile)
     assert(icpt.size == byName2("m_group/m_err").intercepted + read.intercepted)
+    // dave is diverted by both filtered sinks: each report counts him,
+    // and intercept holds him twice
+    assert(byName2("m_group/m_err").intercepted == 3)
+    assert(byName2("intercept/intercept").rows == 6)
     assert(icpt.count(_.contains("\"user\":\"dave\"")) == 2, icpt)
   }
 
@@ -318,32 +322,123 @@ class ProjectSpec extends AnyFunSuite {
     assert(!root.resolve("out").toFile.exists, "runBatch wrote output")
   }
 
-  test("job counts: one Spark job per routed sink in batch and per daemon micro-batch") {
+  /** Spark jobs the block starts (under a fresh job group). */
+  private def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    // m_all, m_err, default, miss, intercept (monitor is daemon-only)
-    val routed = 5
     val byGroup = new org.apache.spark.JobsByProperty(sc, "spark.jobGroup.id")
-    val byQuery = new org.apache.spark.JobsByProperty(sc, "sql.streaming.queryId")
+    val group = s"project-jobs-${java.util.UUID.randomUUID}"
     try {
-      val group = s"project-jobs-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, "runBatch")
-      try ProjectRun.runBatch(spark, Project.load(modernProject().toString))
-      finally sc.clearJobGroup()
-      assert(byGroup(group) == routed)
+      sc.setJobGroup(group, "jobsOf")
+      val r = try body finally sc.clearJobGroup()
+      (r, byGroup(group))
+    } finally byGroup.close()
+  }
 
-      // one micro-batch (the source is one file): no jobs beyond one per
-      // routed sink, plus the monitor aggregate's map and result jobs
-      def daemonJobs(root: Path): Int = {
-        val q = ProjectRun.runStream(spark, Project.load(root.toString), triggerMs = 100L)
-        try q.processAllAvailable() finally q.stop()
-        assert(q.recentProgress.count(_.numInputRows > 0) == 1)
-        byQuery(q.id.toString)
-      }
+  private def withRescue(root: Path): Path = {
+    val confP = root.resolve("conf/wparse.toml")
+    Files.writeString(confP, Files.readString(confP) + "[rescue]\npath = \"./rescue\"\n")
+    root
+  }
+
+  test("job counts: one Spark job per batch run and per daemon micro-batch") {
+    // every routed sink (m_all, m_err, default, miss, intercept) and
+    // the rescue channels come out of one fan-out write
+    assert(jobsOf(ProjectRun.runBatch(spark, Project.load(modernProject().toString)))._2 == 1)
+    val rescued = withRescue(modernProject())
+    assert(jobsOf(ProjectRun.runBatch(spark, Project.load(rescued.toString)))._2 == 1)
+    assert(ProjectRun.readSinkLines(rescued.resolve("rescue/miss").toFile) ==
+      Seq("%%% unparseable %%% ###"))
+
+    // one micro-batch (the source is one file): one job, with the
+    // monitor's counts in the write's observation and its lines written
+    // from the driver; the source is read once, so the batch's input
+    // rows are the file's 4 lines, not a multiple of them
+    val byQuery = new org.apache.spark.JobsByProperty(spark.sparkContext, "sql.streaming.queryId")
+    def daemonJobs(root: Path): Int = {
+      val q = ProjectRun.runStream(spark, Project.load(root.toString), triggerMs = 100L)
+      try q.processAllAvailable() finally q.stop()
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.length == 1)
+      assert(batches.map(_.numInputRows).sum == 4L)
+      byQuery(q.id.toString)
+    }
+    try {
       val noMonitor = modernProject()
       Files.delete(noMonitor.resolve("topology/sinks/infra.d/monitor.toml"))
-      assert(daemonJobs(noMonitor) == routed)
-      assert(daemonJobs(modernProject()) <= routed + 2)
-    } finally { byGroup.close(); byQuery.close() }
+      assert(daemonJobs(noMonitor) == 1)
+      assert(daemonJobs(modernProject()) == 1)
+      val all = withRescue(modernProject())
+      assert(daemonJobs(all) == 1)
+      assert(ProjectRun.readSinkLines(all.resolve("rescue/miss.d/batch=0").toFile) ==
+        Seq("%%% unparseable %%% ###"))
+    } finally byQuery.close()
+  }
+
+  test("expect bases and -p status counts come from the write's observation") {
+    // total_input basis (m_group) and -p in the same run: still one job
+    val root = modernProject()
+    write(root, "topology/sinks/defaults.toml",
+      """[defaults]
+        |[defaults.expect]
+        |basis = "total_input"
+        |""".stripMargin)
+    val m = root.resolve("topology/sinks/business.d/m.toml")
+    Files.writeString(m, Files.readString(m).replace("ratio = 0.125", "ratio = 0.25"))
+    val out = new java.io.ByteArrayOutputStream
+    val (reports, jobs) = jobsOf(Console.withOut(out)(
+      ProjectRun.runBatch(spark, Project.load(root.toString), statPrint = true)))
+    assert(jobs == 1)
+    val stat = out.toString("UTF-8").linesIterator.filter(_.startsWith("[stat]")).toVector
+    assert(stat == Vector("[stat] status=miss count=1", "[stat] status=ok count=3"), stat)
+    // m_err keeps 1 of total_input 4 = 0.25 (of group_input 3 it
+    // would be 0.333, outside 0.25 ± 0.01)
+    assert(reports.find(_.sink == "m_err").get.expectOk)
+  }
+
+  test("a sink outside out/ receives its records; a re-run replaces, not appends") {
+    val root = modernProject()
+    val elsewhere = Files.createTempDirectory("graft-elsewhere")
+    write(root, "connectors/sink.d/20-void.toml",
+      """[[connectors]]
+        |id = "void_sink"
+        |type = "blackhole"
+        |""".stripMargin)
+    val m = root.resolve("topology/sinks/business.d/m.toml")
+    Files.writeString(m, Files.readString(m) +
+      s"""
+        |[[sink_group.sinks]]
+        |name = "m_void"
+        |use = "void_sink"
+        |
+        |[[sink_group.sinks]]
+        |name = "m_far"
+        |use = "file_raw_sink"
+        |params = { base = "$elsewhere", file = "far.dat" }
+        |
+        |[[sink_group.sinks]]
+        |name = "m_near"
+        |use = "file_raw_sink"
+        |params = { base = "./data", file = "near.dat" }
+        |""".stripMargin)
+    val p = Project.load(root.toString)
+    ProjectRun.runBatch(spark, p)
+    val reports = ProjectRun.runBatch(spark, p)
+    // a blackhole sink is counted, never written
+    assert(reports.find(_.sink == "m_void").map(_.rows).contains(3L), reports)
+    assert(ProjectRun.readSinkLines(elsewhere.resolve("far.dat").toFile).size == 3)
+    assert(ProjectRun.readSinkLines(root.resolve("data/near.dat").toFile).size == 3)
+    assert(ProjectRun.readSinkLines(root.resolve("out/m_all.dat").toFile).size == 3)
+    // no staging directory is left behind
+    assert(root.resolve("out").toFile.list().forall(!_.startsWith("_fanout")),
+      root.resolve("out").toFile.list().mkString(", "))
+    assert(!root.resolve("out/m_group-m_void.dat.d").toFile.exists)
+
+    // nothing to emit: the one job still runs and fills the observation
+    val obs = org.apache.spark.sql.Observation()
+    val none = Files.createTempDirectory("graft-fanout").resolve("staging").toString
+    graft.sinks.SinkRouter.writeFanout(spark.range(5).toDF()
+      .observe(obs, org.apache.spark.sql.functions.count("*").as("n")), none, Nil)
+    assert(obs.get("n") == 5L)
   }
 
   test("legacy layout: root sink.toml + framework.toml + infra.d (reference tests/instance shape)") {
@@ -432,6 +527,9 @@ class ProjectSpec extends AnyFunSuite {
   test("runStream: daemon over a project dir routes to append dirs") {
     val root = modernProject()
     val p = Project.load(root.toString)
+    // a stale file from an earlier run of batch 0 (a replay after a
+    // checkpoint loss): the batch's write replaces the directory
+    write(root, "out/m_all.dat.d/batch=0/part-stale", "stale line")
     val q = ProjectRun.runStream(spark, p, triggerMs = 100L)
     try {
       q.processAllAvailable()
@@ -444,7 +542,12 @@ class ProjectSpec extends AnyFunSuite {
     // gen.dat + gen2.dat? The source watches the single file path; the
     // second file is a different path, so only gen.dat flows
     val all = lines("out/m_all.dat.d")
-    assert(all.size == 3)
+    assert(all.size == 3, all)
+    // every routed sink has its (possibly empty) batch directory
+    Seq("m_all", "m_err", "default", "miss", "intercept").foreach { s =>
+      assert(root.resolve(s"out/$s.dat.d/batch=0").toFile.isDirectory, s)
+    }
+    assert(lines("out/default.dat.d").isEmpty)
     assert(all.exists(_.startsWith("user=alice st=200")))
     assert(lines("out/m_err.dat.d").size == 1)
     assert(lines("out/intercept.dat.d").size == 2)
@@ -906,9 +1009,7 @@ class ProjectSpec extends AnyFunSuite {
   test("[rescue].path loop: engine captures failures, wprescue routes through sinks") {
     val root = modernProject()
     // enable the rescue section (reference tests/instance/conf shape)
-    val confP = root.resolve("conf/wparse.toml")
-    Files.writeString(confP, Files.readString(confP) +
-      "[rescue]\npath = \"./rescue\"\n")
+    withRescue(root)
     ProjectRun.runBatch(spark, Project.load(root.toString))
     // the unparseable fixture line landed in the rescue corpus
     val missD = root.resolve("rescue/miss.d").toFile
@@ -1014,7 +1115,8 @@ class ProjectSpec extends AnyFunSuite {
         |ratio = 0.3333
         |tol = 0.01
         |""".stripMargin)
-    val reports = ProjectRun.runBatch(spark, Project.load(root.toString))
+    val (reports, jobs) = jobsOf(ProjectRun.runBatch(spark, Project.load(root.toString)))
+    assert(jobs == 1) // the mdl:m basis is counted by the sink write itself
     val byName = reports.map(r => s"${r.group}/${r.sink}" -> r).toMap
     // basis = records transformed by model m = 3; m_err keeps 1 of them
     // (two diverted) → share 1/3 within 0.3333±0.01 → ok
