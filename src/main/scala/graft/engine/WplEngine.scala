@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import graft.wpl._
+import graft.functions.{FieldSval, JsonQuote}
+import org.apache.spark.sql.GraftExprBridge.{column, expression}
 
 /** Spark integration for the WPL parse engine.
   *
@@ -66,18 +68,13 @@ object WplEngine {
   // Typed extraction (native expressions over the fields array)
   // -------------------------------------------------------------------
 
-  /** JSON string quoting as a native Column (mirror of Json.quote for
-    * the escapes the corpus contains: backslash, quote, \n \r \t). */
-  def jsonQuote(c: Column): Column = concat(lit("\""),
-    replace(replace(replace(replace(replace(
-      c, lit("\\"), lit("\\\\")), lit("\""), lit("\\\"")),
-      lit("\n"), lit("\\n")), lit("\r"), lit("\\r")), lit("\t"), lit("\\t")),
-    lit("\""))
+  /** JSON string quoting as a native Column: the compiled kernel that
+    * escapes like Json.quote (quote, backslash and every C0 control). */
+  def jsonQuote(c: Column): Column = column(JsonQuote(expression(c)))
 
-  /** First-match field lookup by name → sval (reference record.field()). */
-  def fieldSval(name: String): Column =
-    try_element_at(filter(col("fields"), f => f.getField("name") === name), lit(1))
-      .getField("sval") // try_: missing field → null, not an ANSI index error
+  /** First-match field lookup by name → sval (reference record.field());
+    * a missing field is NULL. */
+  def fieldSval(name: String): Column = column(FieldSval(expression(col("fields")), name))
 
   def extractString(name: String): Column = fieldSval(name)
   def extractLong(name: String): Column = fieldSval(name).cast("long")

@@ -1,8 +1,9 @@
 package graft.sinks
 
+import graft.functions.FormatFields
 import graft.wpl._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftExprBridge.{column, expression}
 
 /** Record → line formatters for file/tcp/syslog sinks (reference fmt
   * `json|kv|csv|raw|proto_text`, src/sinks/utils/formatter.rs:25-38).
@@ -13,48 +14,20 @@ object Formatters {
   /** Native-Column formatter over a pipeline `fields` column
     * (array<struct<name, dtype, sval>>) — the dtype-aware twin of the
     * pure functions below, shared by the project sink path, `wparse
-    * batch`'s channel writer and the kafka wrapper so every surface
-    * emits TYPED json (`"st":200`, not `"st":"200"` — reference
-    * src/sinks/utils/formatter.rs:27 serializes the typed Value).
-    * Whole-stage-codegen'd: no UDF, no WValue rebuild per row.
+    * batch`'s channel writer and the kafka and victorialogs sinks so
+    * every surface emits TYPED json (`"st":200`, not `"st":"200"` —
+    * reference src/sinks/utils/formatter.rs:27 serializes the typed
+    * Value). One compiled pass per record ([[FormatFields]]: real
+    * codegen, no UDF, no lambda, no WValue rebuild per row); its
+    * NULL-field rules are on [[graft.functions.SinkKernels.format]].
+    * json strings escape like [[Json.quote]], every C0 control
+    * included.
     *
     * Documented divergence (same as the pure-path note in ProjectRun):
     * the reference re-renders from its typed in-memory Value, so a
     * `time` field emits its raw text there but its epoch-micros sval
     * here, and proto_text does not re-nest `obj` svals. */
-  def line(fmt: String, fields: Column): Column = fmt match {
-    case "json" =>
-      val item = (f: Column) => concat(
-        graft.engine.WplEngine.jsonQuote(f.getField("name")), lit(":"),
-        when(f.getField("dtype").isin("digit", "float", "bool", "obj", "array"),
-          f.getField("sval"))
-          .when(f.getField("dtype") === "null", lit("null"))
-          .otherwise(graft.engine.WplEngine.jsonQuote(f.getField("sval"))))
-      concat(lit("{"), array_join(transform(fields, item), ","), lit("}"))
-    case "kv" =>
-      array_join(transform(fields, f =>
-        concat(f.getField("name"), lit("="), f.getField("sval"))), " ")
-    case "csv" =>
-      array_join(transform(fields, f => {
-        val s = f.getField("sval")
-        when(s.contains(",") || s.contains("\"") || s.contains("\n"),
-          concat(lit("\""), replace(s, lit("\""), lit("\"\"")), lit("\"")))
-          .otherwise(s)
-      }), ",")
-    case "raw" =>
-      coalesce(
-        try_element_at(filter(fields, f => f.getField("name") === "raw_log"), lit(1))
-          .getField("sval"),
-        array_join(transform(fields, f =>
-          concat(f.getField("name"), lit("="), f.getField("sval"))), " "))
-    case "proto_text" =>
-      array_join(transform(fields, f =>
-        concat(f.getField("name"), lit(": "),
-          when(f.getField("dtype").isin("digit", "float", "bool"), f.getField("sval"))
-            .otherwise(concat(lit("\""),
-              replace(f.getField("sval"), lit("\""), lit("\\\"")), lit("\""))))), " ")
-    case other => throw new IllegalArgumentException(s"unknown sink fmt: $other")
-  }
+  def line(fmt: String, fields: Column): Column = column(FormatFields(expression(fields), fmt))
 
   def json(fields: Vector[WField]): String =
     fields.map(f => Json.quote(f.name) + ":" + f.value.jval).mkString("{", ",", "}")

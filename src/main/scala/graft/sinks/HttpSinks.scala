@@ -122,20 +122,9 @@ object VictoriaLogsSink {
           ingestNs)
       }
       .getOrElse(ingestNs)
-    // remaining C0 controls (beyond jsonQuote's \n \r \t) must still
-    // escape or the emitted line is not valid JSON — e.g. an embedded
-    // ESC from ANSI color codes in a log payload. The escape chain is
-    // gated behind one rlike so clean rows (the norm) pay a single
-    // regex probe, not 29 passes
-    val quoted = WplEngine.jsonQuote(Formatters.line(fmt, col("fields")))
-    val ctrl = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
-    val escaped = (0x00 until 0x20)
-      .filterNot(Seq(0x09, 0x0a, 0x0d).contains)
-      .foldLeft(quoted) { (c, i) =>
-        regexp_replace(c, java.util.regex.Pattern.quote(i.toChar.toString),
-          f"\\\\u$i%04x")
-      }
-    val msg = when(quoted.rlike(ctrl), escaped).otherwise(quoted)
+    // jsonQuote escapes every C0 control (an ANSI colour ESC, a BEL),
+    // so the line is valid JSON whatever the record holds
+    val msg = WplEngine.jsonQuote(Formatters.line(fmt, col("fields")))
     parsed.select(concat(
       lit("{\"_msg\":"), msg,
       lit(",\"_time\":"), timeNs.cast("string"), lit("}")).as("value"))

@@ -79,6 +79,22 @@ class HttpSinksSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("victorialogs _msg escapes every C0 control: kv unchanged, json-fmt valid JSON inside") {
+    val text = "a\u0007b\u001b[31mc\td"
+    val df = spark.range(1).select(array(struct(lit("m").as("name"),
+      lit("chars").as("dtype"), lit(text).as("sval"))).as("fields"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    // kv fmt: the same bytes as before the quoting kernel
+    val kv = VictoriaLogsSink.prepare(df, fmt = "kv").head().getString(0)
+    assert(kv.startsWith("{\"_msg\":\"m=a\\u0007b\\u001b[31mc\\td\",\"_time\":"), kv)
+    assert(mapper.readTree(kv).get("_msg").asText == s"m=$text")
+    // json fmt: the inner line is itself valid JSON holding the text
+    val js = VictoriaLogsSink.prepare(df, fmt = "json").head().getString(0)
+    val inner = mapper.readTree(js).get("_msg").asText
+    assert(inner == "{\"m\":\"a\\u0007b\\u001b[31mc\\td\"}", inner)
+    assert(mapper.readTree(inner).get("m").asText == text)
+  }
+
   test("victorialogs _time guard: out-of-range numerics fall back to ingest time, never throw") {
     // r12 ADVICE (medium): a 17-18 digit numeric time field passed the
     // digits guard but overflowed the *1000 ns multiply under ANSI

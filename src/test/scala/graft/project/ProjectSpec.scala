@@ -259,6 +259,42 @@ class ProjectSpec extends AnyFunSuite {
     assert(icpt.count(_.contains("\"user\":\"dave\"")) == 2, icpt)
   }
 
+  test("an ANSI colour code reaches a json sink as JSON that parses back to it") {
+    val root = modernProject()
+    val red = "\u001b[31mred\u001b[0m"
+    Files.writeString(root.resolve("src_dat/gen.dat"), s"user=$red st=404 op=read")
+    ProjectRun.runBatch(spark, Project.load(root.toString))
+    val lines = ProjectRun.readSinkLines(root.resolve("out/m_err.dat").toFile)
+    assert(lines.size == 1)
+    assert(lines.head.contains("\\u001b[31mred"), lines.head)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
+    assert(node.get("user").asText == red)
+    assert(node.get("st").asInt == 404)
+  }
+
+  test("plan guard: the perfbench instance's sink lines and predicates are all compiled") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.functions.{col, transform}
+    import spark.implicits._
+    val p = Project.load(Paths.get("perfbench/instance").toAbsolutePath.toString)
+    val parsed = graft.engine.Pipeline.run(Seq.empty[String].toDF("raw_line"), "raw_line",
+      p.wplSource, p.omlSources.map(_._2), keep = Seq("raw_line"))
+    // every resolved node of `c` that is evaluated interpreted
+    def interpreted(c: Column): Seq[String] =
+      parsed.select(c).queryExecution.analyzed.expressions.flatMap(_.collect {
+        case e: CodegenFallback => e.prettyName
+        case e: HigherOrderFunction => e.prettyName
+      })
+    assert(interpreted(transform(col("fields"), f => f.getField("name"))).nonEmpty)
+    val plan = ProjectRun.routePlan(p)
+    assert(plan.size == 8 && plan.exists(_.diverted.nonEmpty))
+    val cols = plan.flatMap(r => (r.line +: r.emits) ++ r.diverted) ++
+      Seq("json", "kv", "csv", "raw", "proto_text").map(graft.sinks.Formatters.line(_, col("fields")))
+    cols.foreach(c => assert(interpreted(c).isEmpty, c.toString))
+  }
+
   test("runBatch: a record with no OML model reaches the default sink") {
     val root = modernProject()
     // three rules, models for two: the /x/pair records transform under
